@@ -99,8 +99,3 @@ def unmapped_report(df: DataFrame, col: str, lookup: DataFrame) -> DataFrame:
     325-327). left_anti join — nothing shuffles but the distinct values."""
     norm_vals = df.select(normalize_text(col).alias("value_norm")).distinct()
     return norm_vals.join(F.broadcast(lookup), "value_norm", "left_anti")
-
-
-def with_provenance(df: DataFrame, value: str, col: str = "source_fact") -> DataFrame:
-    """F15: literal provenance column (machineLearning.py:161)."""
-    return df.withColumn(col, F.lit(value))

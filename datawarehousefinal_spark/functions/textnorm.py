@@ -43,32 +43,6 @@ def strip_accents(col: Column | str) -> Column:
     return F.translate(c, _ACCENTED, _PLAIN)
 
 
-def strip_accents_nfd(col: Column | str) -> Column:
-    """F2 exact-parity variant: true Unicode NFD via Arrow-batched pandas
-    UDF. ~10-100× slower than `strip_accents`; only for corpora with
-    combining marks outside the Latin map."""
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _nfd(s):  # type: ignore[no-untyped-def]
-        import unicodedata
-
-        return s.map(
-            lambda x: (
-                "".join(
-                    ch
-                    for ch in unicodedata.normalize("NFD", x)
-                    if unicodedata.category(ch) != "Mn"
-                )
-                if x is not None
-                else None
-            )
-        )
-
-    return _nfd(F.col(col) if isinstance(col, str) else col)
-
-
 def collapse_whitespace(col: Column | str) -> Column:
     """F3: `' '.join(text.split())` (Datos/preprocessing.py:21)."""
     c = F.col(col) if isinstance(col, str) else col

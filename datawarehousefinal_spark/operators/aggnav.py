@@ -211,8 +211,9 @@ def materialize_aggregate(
         rollup.write.mode("overwrite").partitionBy(pcol).parquet(path)
         rollup = rollup.sparkSession.read.parquet(path)
     elif path is not None:
+        # Read back under the rollup's own schema: no inference job.
         rollup.write.mode("overwrite").parquet(path)
-        rollup = rollup.sparkSession.read.parquet(path)
+        rollup = rollup.sparkSession.read.schema(rollup.schema).parquet(path)
     return AggTable(
         name=name or f"agg_{'_'.join(grain)}", grain=grain, table=rollup
     )
@@ -523,7 +524,9 @@ def materialize_recommended(
         if path_prefix is not None:
             path = f"{path_prefix.rstrip('/')}/{name}"
             rollup.write.mode("overwrite").parquet(path)
-            rollup = rollup.sparkSession.read.parquet(path)
+            rollup = rollup.sparkSession.read.schema(rollup.schema).parquet(
+                path
+            )
         table = AggTable(name=name, grain=rec.grain, table=rollup)
         tables.append(table)
         if register:

@@ -831,79 +831,6 @@ def unimax_allocation(
     )
 
 
-def contrastive_negative_rings(
-    df: DataFrame,
-    id_col: str,
-    anchor_filter,
-    k: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """Deterministic in-batch negative sampling for contrastive /
-    triplet training: every anchor gets ``k`` pseudo-random negatives
-    drawn as RING OFFSETS over the md5-shuffled corpus order — rank
-    ``(r_a + j·stride) mod N`` for ``j = 1..k`` with ``stride =
-    max(N // (k+1), 1)``. The md5 shuffle makes the ring neighbors
-    uniform-random with respect to any real feature, while staying a
-    pure function of (id, seed): the same corpus always yields the
-    same negatives, across runs, engines, and partitionings — the
-    property that makes contrastive batches resumable.
-
-    Scale shape: the global rank comes from the two-phase distributed
-    prefix sum (packing.distributed_cumsum — never a single-partition
-    window); the corpus total rides as a one-row broadcast (the
-    bounded scalar pattern); negatives attach with ONE equi-join on
-    the target rank. No sampling loop, no per-anchor scan.
-
-    ``anchor_filter`` is a Column predicate selecting the anchor rows.
-    Self-collisions (possible only when N ≤ k·stride wraps) are
-    dropped rather than re-drawn — the documented small-N trade.
-
-    Output: ``anchor_id, j (int, 1-based ring slot), neg_id``.
-    """
-    from datawarehousefinal_spark.operators.packing import distributed_cumsum
-
-    if k <= 0:
-        raise ValueError("k must be positive")
-    keyed = df.select(
-        F.col(id_col),
-        F.md5(
-            F.concat(F.col(id_col).cast("string"), F.lit(f":{seed}"))
-        ).alias("__key"),
-    ).withColumn("__one", F.lit(1))
-    ranked = distributed_cumsum(
-        keyed, ["__key", id_col], "__one", out_col="__rk"
-    ).withColumn("__r0", F.col("__rk") - 1)
-    total = ranked.agg(F.count(F.lit(1)).alias("__n"))
-    anchors = (
-        ranked.filter(anchor_filter)
-        .crossJoin(F.broadcast(total))
-        .select(
-            F.col(id_col).alias("anchor_id"),
-            F.col("__r0").alias("__ra"),
-            "__n",
-            F.explode(F.array(*[F.lit(j) for j in range(1, k + 1)])).alias(
-                "j"
-            ),
-        )
-        .withColumn(
-            "__stride",
-            F.greatest(F.floor(F.col("__n") / F.lit(k + 1)), F.lit(1)),
-        )
-        .withColumn(
-            "__target",
-            (F.col("__ra") + F.col("j") * F.col("__stride")) % F.col("__n"),
-        )
-    )
-    pool = ranked.select(
-        F.col("__r0").alias("__target"), F.col(id_col).alias("neg_id")
-    )
-    return (
-        anchors.join(pool, "__target")
-        .filter(F.col("neg_id") != F.col("anchor_id"))
-        .select("anchor_id", F.col("j").cast("int"), "neg_id")
-    )
-
-
 def domain_reweight(
     scored: DataFrame,
     domain_col: str,

@@ -94,8 +94,3 @@ def seeded_sample_exact(df: DataFrame, n: int, seed: int = 42) -> DataFrame:
     exact n needs a rand-ordered limit (costs a sort of the surviving
     partitions — fine for sample-sized outputs, machineLearning.py:146)."""
     return df.orderBy(F.rand(seed)).limit(n)
-
-
-def seeded_sample_fraction(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """C1 scale path: per-partition Bernoulli sample, no sort, no shuffle."""
-    return df.sample(fraction=fraction, seed=seed)

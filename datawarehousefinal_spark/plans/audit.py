@@ -61,16 +61,6 @@ def assert_broadcast_join(df: DataFrame, min_count: int = 1) -> None:
     assert n >= min_count, f"expected >= {min_count} BroadcastHashJoin, found {n}"
 
 
-def assert_no_shuffle_join_of(df: DataFrame, table_hint: str) -> None:
-    """No SortMergeJoin/ShuffledHashJoin in a plan that mentions
-    ``table_hint`` — use when a specific join must stay broadcast."""
-    plan = physical_plan(df)
-    if table_hint in plan:
-        assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, (
-            f"join involving {table_hint} shuffles"
-        )
-
-
 def assert_partial_aggregation(df: DataFrame) -> None:
     """Aggregation partial-combines map-side before the exchange (the
     ``partial_*`` mode HashAggregate) — shuffles carry one row per

@@ -192,6 +192,31 @@ def test_parquet_rollup_serves_without_the_fact(spark, tmp_path):
     )
 
 
+def test_declared_read_back_equals_inferred(spark, tmp_path):
+    """A parquet rollup is read back under its own schema (no inference
+    job); that must give the same schema and rows as inferring it."""
+    from datawarehousefinal_spark.operators.aggnav import (
+        materialize_recommended,
+    )
+
+    for i, cube in enumerate([_cube(spark), _dc_cube(spark)]):
+        path = str(tmp_path / f"agg{i}")
+        agg = materialize_aggregate(cube, ["Fecha.Mes"], path=path)
+        (rec,) = materialize_recommended(
+            cube,
+            ["SELECT {[Measures].[Cantidad]} ON COLUMNS, "
+             "{[Fecha].[Anio].Members} ON ROWS FROM [Toy]"],
+            max_tables=1,
+            path_prefix=str(tmp_path / f"recs{i}"),
+            register=False,
+        )
+        rec_path = str(tmp_path / f"recs{i}" / rec.name)
+        for table, p in [(agg.table, path), (rec.table, rec_path)]:
+            inferred = spark.read.parquet(p)
+            assert table.schema == inferred.schema
+            assert _sorted_rows(table) == _sorted_rows(inferred)
+
+
 def test_grain_columns_expand_hierarchy_chain(spark):
     cube = _cube(spark)
     assert grain_columns(cube, ["Fecha.Mes"]) == ("anio", "mes")

@@ -5,15 +5,91 @@ own session factory having set ``spark.sql.legacy.parquet.nanosAsLong``; the
 harness builds a vanilla SparkSession without it and the events.parquet read
 throws PARQUET_TYPE_ILLEGAL. These tests strip the conf from the session
 before calling ``load_table`` so that dependency can never silently return.
+
+The declared-schema tests pin the other half of the loader contract: every
+``SCHEMAS`` entry equals what inference gives at every scale factor present,
+a declared load runs no Spark job, and a global inference conf cannot change
+a declared table's types.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+import uuid
+from contextlib import contextmanager
+
 import pytest
 
-from datawarehousefinal_spark.sources.testdata import load_table
+from datawarehousefinal_spark.sources.testdata import SCHEMAS, load_table
 
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+NTZ_CONF = "spark.sql.parquet.inferTimestampNTZ.enabled"
+
+
+@contextmanager
+def _job_group(spark):
+    """Run the body under a fresh job group; yields the group id.
+
+    Counting that group's jobs is exact, unlike diffing the global job
+    list, which the status tracker caps at its retained-jobs limit."""
+    sc = spark.sparkContext
+    keys = (
+        "spark.jobGroup.id",
+        "spark.job.description",
+        "spark.job.interruptOnCancel",
+    )
+    prev = {k: sc.getLocalProperty(k) for k in keys}
+    group = f"load-table-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "load_table job count")
+    try:
+        yield group
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
+
+
+def _jobs_in(spark, group) -> list[int]:
+    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", sorted(SCHEMAS))
+def test_declared_schema_equals_inferred(spark, sf_dir, name):
+    """A regenerated fixture whose schema drifts fails here, loudly,
+    instead of being mis-read under a stale declaration."""
+    sf_dirs = sorted(glob.glob(os.path.join(os.path.dirname(sf_dir), "sf*")))
+    assert sf_dirs
+    for d in sf_dirs:
+        inferred = spark.read.parquet(f"{d}/{name}.parquet").schema
+        assert load_table(spark, d, name).schema == inferred, d
+
+
+def test_declared_load_runs_no_job(spark, sf_dir):
+    with _job_group(spark) as group:
+        for name in SCHEMAS:
+            load_table(spark, sf_dir, name).schema
+    assert _jobs_in(spark, group) == []
+    # control: the inferred events load does run one, so the count is live
+    with _job_group(spark) as group:
+        load_table(spark, sf_dir, "events")
+    assert len(_jobs_in(spark, group)) >= 1
+
+
+def test_declared_types_ignore_inference_conf(spark, sf_dir):
+    """No global conf may change results: with NTZ inference off, a plain
+    read turns ``o_orderdate`` into an LTZ timestamp, the declared load
+    keeps every type."""
+    want = {n: load_table(spark, sf_dir, n).dtypes for n in SCHEMAS}
+    prev = spark.conf.get(NTZ_CONF)
+    spark.conf.set(NTZ_CONF, "false")
+    try:
+        got = {n: load_table(spark, sf_dir, n).dtypes for n in SCHEMAS}
+        plain = dict(spark.read.parquet(f"{sf_dir}/orders.parquet").dtypes)
+    finally:
+        spark.conf.set(NTZ_CONF, prev)
+    assert got == want
+    assert dict(want["orders"])["o_orderdate"] == "timestamp_ntz"
+    assert plain["o_orderdate"] == "timestamp"
 
 
 @pytest.fixture
