@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.functions.dates import future_dates, proleptic_ordinal
 from datawarehousefinal_spark.operators.analytics import time_ordered_split
+from datawarehousefinal_spark.session import materialized
 
 SEED = 42
 
@@ -191,37 +192,22 @@ def fit_preprocess(
     df: DataFrame,
     exclude: tuple[str, ...] = (),
     output_col: str = "features",
-    persist: bool = True,
 ) -> tuple[PipelineModel, DataFrame]:
     """Fit the M1-M5 pipeline on ``df`` and return (model, transformed df
     with the ``features`` column and intermediates dropped).
 
-    ``persist=True`` (default) marks both the imputed input and the
-    returned feature frame MEMORY_AND_DISK: the pipeline's estimator
-    stages each scan the input, and every downstream consumer (KMeans
-    iterations, CV folds, evaluators) re-scans the output — without a
-    persist each of those passes recomputes the whole upstream plan from
-    the source scan. Persisting iterative-ML inputs is standard Spark ML
-    practice at any scale (MEMORY_AND_DISK spills, never OOMs); pass
-    ``persist=False`` for one-shot transforms.
+    The imputed input is cached for the fit only (the pipeline's
+    estimator stages each scan it). The returned feature frame is lazy
+    and uncached: an iterating consumer (KMeans iterations, CV folds, a
+    forest's tree passes) wraps it in :func:`session.materialized`, a
+    one-shot consumer (a transform, a write) just reads it.
     """
     numeric, categorical = split_feature_types(df, exclude)
-    filled = impute_most_frequent(df, categorical)
-    if persist:
-        filled = filled.persist()
-    model = build_preprocessor(numeric, categorical, output_col).fit(filled)
+    with materialized(impute_most_frequent(df, categorical)) as filled:
+        model = build_preprocessor(numeric, categorical, output_col).fit(filled)
     out = model.transform(filled)
     helpers = [c for c in out.columns if c.startswith("__")]
-    out = out.drop(*helpers)
-    if persist:
-        # materialize the feature frame, then release the intermediate —
-        # otherwise both frames stay pinned for the session lifetime and
-        # repeated fits accumulate dead cache. Callers own `out`'s
-        # lifecycle (unpersist it when done).
-        out = out.persist()
-        out.count()
-        filled.unpersist()
-    return model, out
+    return model, out.drop(*helpers)
 
 
 # ---------------------------------------------------------------------------
@@ -698,12 +684,13 @@ def embedding_tabular_classifier(
     n_classes = len(label_stage.labels)
     # input width = Σ(cardinality+1) one-hot slots + numerics; known only
     # after the indexers fit, so fit the feature pipeline first, then the
-    # MLP. The feature frame is persisted across the L-BFGS iterations
+    # MLP. The feature frame is cached across the L-BFGS iterations
     # (each scans it) and released before returning; the returned
     # predictions re-derive features lazily from ``df`` — no cache leak.
     feature_model = Pipeline(stages=stages).fit(df)
-    feats = label_stage.transform(feature_model.transform(df)).persist()
-    try:
+    with materialized(
+        label_stage.transform(feature_model.transform(df))
+    ) as feats:
         input_dim = feats.select("__etc_features").head()["__etc_features"].size
         bottleneck = emb_dim * len(categorical) + len(numeric)
         layers = [input_dim, bottleneck, *hidden, n_classes]
@@ -714,8 +701,6 @@ def embedding_tabular_classifier(
             featuresCol="__etc_features",
             labelCol="label",
         ).fit(feats)
-    finally:
-        feats.unpersist()
     model = PipelineModel(stages=[*feature_model.stages, label_stage, mlp])
     pred = model.transform(df)
     helpers = [c for c in pred.columns if c.startswith("__")]
@@ -790,15 +775,16 @@ def rbf_svc_approx(
     applies the SAME frozen feature map (same seed → same W, b) and the
     fitted model — use it for test/serving frames.
     """
-    # Persist the lifted frame across the fit: every L-BFGS iteration of
+    # Cache the lifted frame across the fit: every L-BFGS iteration of
     # every one-vs-rest binary model rescans its input, and without the
-    # persist each rescan re-runs the Arrow projection kernel. Released
+    # cache each rescan re-runs the Arrow projection kernel. Released
     # before returning; parallelism=4 overlaps the independent binary
     # fits (each underuses the cluster at post-lift widths).
-    lifted = random_fourier_features(
-        train, features_col, "__rff", n_components, gamma, seed
-    ).persist()
-    try:
+    with materialized(
+        random_fourier_features(
+            train, features_col, "__rff", n_components, gamma, seed
+        )
+    ) as lifted:
         w = {"weightCol": weight_col} if weight_col else {}
         svc = LinearSVC(
             featuresCol="__rff",
@@ -814,8 +800,6 @@ def rbf_svc_approx(
             parallelism=4,
             **w,
         ).fit(lifted)
-    finally:
-        lifted.unpersist()
 
     def transform_fn(df: DataFrame) -> DataFrame:
         out = ovr.transform(

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from datawarehousefinal_spark.operators.dedup import _fan_out, exact_dedup
 from datawarehousefinal_spark.operators.incremental import (
@@ -34,6 +33,7 @@ from datawarehousefinal_spark.operators.textstats import (
     language_id,
     quality_score,
 )
+from datawarehousefinal_spark.session import persisted
 
 
 def curate_corpus(
@@ -51,7 +51,6 @@ def curate_corpus(
     shingle_width: int = 5,
     val_pct: int = 1,
     seed: int = 42,
-    persist: bool = True,
     near_dup_mode: str = "greedy",
 ) -> tuple[DataFrame, DataFrame]:
     """Run the full curation funnel; returns ``(curated, report)``.
@@ -77,17 +76,13 @@ def curate_corpus(
     by the banding layer with an explicit error) — lowering ``num_hashes``
     below 16 requires lowering the banding parameters with it.
 
-    With ``persist`` (default), intermediate survivors cache at
-    MEMORY_AND_DISK: each stage's frame feeds both the next stage and the
-    report union, and the near-dup stage scans its input several times.
-    The entries are bounded by the corpus row count (ids + text) and live
-    until session teardown or LRU eviction; long-lived sessions invoking
-    the funnel repeatedly should pass ``persist=False`` and manage
-    caching themselves.
+    The rules, exact-dedup and near-dup tiers are cached
+    (:func:`session.persisted`): each stage's frame feeds both the next
+    stage and the report union, and the near-dup stage scans its input
+    several times. Both returned frames read them, so the entries —
+    bounded by the corpus row count (ids + text) — live until session
+    teardown or LRU eviction.
     """
-    def _maybe_persist(df: DataFrame) -> DataFrame:
-        return df.persist(StorageLevel.MEMORY_AND_DISK) if persist else df
-
     length_ok = docs.filter(
         (F.length(text_col) >= min_chars) & (F.length(text_col) <= max_chars)
     )
@@ -102,11 +97,9 @@ def curate_corpus(
     rules = scored.filter(F.col("__q") >= min_quality)
     if allowed_langs is not None:
         rules = rules.filter(F.col("lang_pred").isin(allowed_langs))
-    rules = _maybe_persist(rules.drop("__q"))
+    rules = persisted(rules.drop("__q"))
 
-    exact = _maybe_persist(
-        exact_dedup(rules, text_col, [id_col], keep_count_col=None)
-    )
+    exact = persisted(exact_dedup(rules, text_col, [id_col], keep_count_col=None))
 
     if near_dup_mode == "greedy":
         near, _delta = incremental_minhash_dedup(
@@ -139,7 +132,7 @@ def curate_corpus(
         raise ValueError(
             f"near_dup_mode must be 'greedy' or 'transitive', got {near_dup_mode!r}"
         )
-    near = _maybe_persist(near)
+    near = persisted(near)
 
     bucket = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(100))
     curated = near.withColumn(
@@ -642,7 +635,7 @@ def dsir_importance(
     :func:`weighted_sample_exact` on ``exp(log_weight)`` or threshold
     on ``log_weight`` directly.
 
-    Persist lifecycle — BOUNDED LEAK, ACCEPTED: the two scoped persists
+    Cache lifecycle — BOUNDED LEAK, ACCEPTED: the two caches
     below (``hist``: one row per (doc, hit bucket); ``p_t``: ≤
     ``n_buckets`` rows) are referenced by the returned lazy plan, so
     the operator cannot unpersist them itself, and the caller cannot
@@ -653,7 +646,7 @@ def dsir_importance(
     scale-killer), and both frames are orders of magnitude smaller
     than the token stream whose re-explosion they prevent. A long-lived
     session re-running the face accumulates one bounded pair per run
-    under MEMORY_AND_DISK (evictable, never OOM-fatal).
+    (spilling to disk, evictable, never OOM-fatal).
     """
     from datawarehousefinal_spark.operators.textstats import (
         whitespace_tokens,
@@ -692,19 +685,14 @@ def dsir_importance(
     # repeated_span_report regression; the persisted frames are the
     # bounded ones (histogram rows / ≤ n_buckets rows), never the token
     # stream.
-    hist = (
+    hist = persisted(
         feats(raw, with_id=True)
         .groupBy(id_col, "bucket")
         .agg(F.count(F.lit(1)).alias("n_db"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     q_r = hist.groupBy("bucket").agg(F.sum("n_db").alias("ct_r"))
     t_feats = feats(target, with_id=False)
-    p_t = (
-        t_feats.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("ct_t"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    p_t = persisted(t_feats.groupBy("bucket").agg(F.count(F.lit(1)).alias("ct_t")))
     totals = p_t.agg(F.sum("ct_t").alias("tot_t")).crossJoin(
         q_r.agg(F.sum("ct_r").alias("tot_r"))
     )

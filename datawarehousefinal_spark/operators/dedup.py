@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from datawarehousefinal_spark.functions.textnorm import normalize_text
+from datawarehousefinal_spark.session import materialized, persisted
 
 
 def _fan_out(df: DataFrame) -> DataFrame:
@@ -290,18 +291,20 @@ def jaccard_for_pairs(
         .distinct()
     )
     # The shingle frame feeds THREE consumers (per-doc sizes + both
-    # intersection-join sides); unpersisted, the scan→semi-join→fan-out→
+    # intersection-join sides); uncached, the scan→semi-join→fan-out→
     # explode subtree replicates per consumer in the plan (4 Generate
-    # nodes — each re-shingling the pruned docs). Scoped persist, same
+    # nodes — each re-shingling the pruned docs). Scoped cache, same
     # discipline as _simhash_fp_pairs: the RESULT (one row per candidate
-    # pair — sparse by contract) is eagerly checkpointed before the
-    # finally releases the cache, so nothing downstream re-reads it and
-    # nothing outlives the call. The cached frame is candidate-sized
+    # pair — sparse by contract) is eagerly checkpointed inside the
+    # block, so nothing downstream re-reads the cache and nothing
+    # outlives the call. The cached frame is candidate-sized
     # (~2·|pairs| docs of shingles), never corpus-sized.
-    sh = _fan_out(df.join(ids, id_col, "semi")).select(
-        F.col(id_col), F.explode(char_shingles(text_col, shingle_width)).alias("__sh")
-    ).persist()
-    try:
+    with materialized(
+        _fan_out(df.join(ids, id_col, "semi")).select(
+            F.col(id_col),
+            F.explode(char_shingles(text_col, shingle_width)).alias("__sh"),
+        )
+    ) as sh:
         sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
         a = sh.select(F.col(id_col).alias("id_a"), F.col("__sh"))
         b = sh.select(F.col(id_col).alias("id_b"), F.col("__sh"))
@@ -325,8 +328,6 @@ def jaccard_for_pairs(
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        sh.unpersist()
 
 
 def minhash_near_dupes(
@@ -619,8 +620,9 @@ def simhash_near_dupes(
     # banding, AND both expansion branches — without a persist the
     # full shingle-explode + 22-aggregate fingerprint pass replicates
     # once per consumer (7 scans in the physical plan). Fingerprints are
-    # (id, long) — ~24 bytes/doc, MEMORY_AND_DISK never OOMs.
-    fp = simhash(df, id_col, text_col, shingle_width).persist()
+    # (id, long) — ~24 bytes/doc, and the cache spills to disk. The
+    # returned pairs read it, so it stays cached after the call.
+    fp = persisted(simhash(df, id_col, text_col, shingle_width))
     return simhash_near_dupes_from_fingerprints(
         fp,
         id_col,
@@ -688,17 +690,18 @@ def _simhash_fp_pairs(
     combo keys, skew guard, loud-drop check — cannot drift between them."""
     keyed = simhash_combo_keys(distinct_fp, num_blocks, combo_size)
     # The counted frame feeds the guard aggregate AND both self-join
-    # branches — three scans of the banding window unpersisted (measured
-    # +60% on the registered query). The persist is SCOPED: try/finally
+    # branches — three scans of the banding window uncached (measured
+    # +60% on the registered query). The cache is SCOPED: the block
     # releases it whether the guard raises or the pair frame finishes,
     # and the pair output is localCheckpoint-ed EAGERLY (it is the
     # function's result — verified near-dup pairs, orders of magnitude
     # smaller than the banding entries) so nothing downstream re-reads
-    # the cache after the unpersist.
-    counted = keyed.withColumn(
-        "__n", F.count(F.lit(1)).over(Window.partitionBy("table", "key"))
-    ).persist()
-    try:
+    # the cache after the release.
+    with materialized(
+        keyed.withColumn(
+            "__n", F.count(F.lit(1)).over(Window.partitionBy("table", "key"))
+        )
+    ) as counted:
         if max_dropped_frac is not None:
             # "No silent caps": measure how much of the banding the skew
             # guard is about to throw away, and fail loudly when it is
@@ -741,8 +744,6 @@ def _simhash_fp_pairs(
             .distinct()
             .localCheckpoint(eager=True)
         )
-    finally:
-        counted.unpersist()
 
 
 def simhash_near_dupes_from_fingerprints(
@@ -1193,20 +1194,18 @@ def repeated_span_report(
     # xxhash) is CPU-bound — a compact one-file corpus would otherwise
     # run it on one core (measured: the sf0.1 documents scan is a single
     # partition).
-    shingled = (
+    # The shingle frame feeds the counts aggregate AND the join-back;
+    # the two consumers' exchanges differ (agg vs join side), so
+    # exchange reuse does NOT dedup the explode — uncached it computes
+    # twice (round-6 bench finding). Scoped cache, same pattern as
+    # _simhash_fp_pairs: the (small, per-span) result is eagerly
+    # checkpointed inside the block.
+    with materialized(
         _fan_out(df.filter(F.col(text_col).isNotNull()))
         .filter(F.size(toks) >= 1)
         .select(F.col(id_col), F.explode(pairs).alias("__s"))
         .select(F.col(id_col), F.col("__s.pos").alias("__pos"), F.col("__s.gh").alias("__gh"))
-        # The shingle frame feeds the counts aggregate AND the join-back;
-        # the two consumers' exchanges differ (agg vs join side), so
-        # exchange reuse does NOT dedup the explode — unpersisted it
-        # computes twice (round-6 bench finding). Scoped persist, same
-        # pattern as _simhash_fp_pairs: released in finally after the
-        # (small, per-span) result is eagerly checkpointed.
-        .persist()
-    )
-    try:
+    ) as shingled:
         counts = shingled.groupBy("__gh").agg(F.count(F.lit(1)).alias("__cnt"))
         dup = (
             shingled.join(counts, "__gh")
@@ -1235,8 +1234,6 @@ def repeated_span_report(
             "n_tokens",
             "n_shingles",
         ).localCheckpoint(eager=True)
-    finally:
-        shingled.unpersist()
 
 
 def prefix_filter_jaccard_pairs(

@@ -37,7 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from datawarehousefinal_spark.session import materialized
 
 
 #: Pair-count bound for the driver-side union-find fast path. 200k pairs
@@ -102,69 +103,62 @@ def connected_components(
     ``pairs`` is consumed at least twice (the size probe, then either
     the driver collect or the symmetrized edge build), and candidate
     pipelines feeding it (LSH banding + verification) are expensive to
-    replay — so it is persisted here for the duration of the call
-    unless the caller already persisted it (measured on the curation
-    funnel: the unpersisted probe+collect replayed the full minhash
+    replay — so it is cached for the duration of the call (a frame the
+    caller already cached stays the caller's; measured on the curation
+    funnel: the uncached probe+collect replayed the full minhash
     pipeline twice). Both return paths leave no lineage on ``pairs``:
     the driver path materializes via collect, the distributed path via
     ``localCheckpoint``.
     """
-    owned = pairs.storageLevel == StorageLevel.NONE
-    if owned:
-        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    if small_graph_pairs > 0:
-        probe = pairs.limit(small_graph_pairs + 1).count()
-        if probe <= small_graph_pairs:
-            out = _components_driver(pairs, id_a, id_b)
-            if owned:
-                pairs.unpersist()
-            return out
-    fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    sym = fwd.unionByName(
-        pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    with materialized(pairs) as pairs:
+        if small_graph_pairs > 0:
+            probe = pairs.limit(small_graph_pairs + 1).count()
+            if probe <= small_graph_pairs:
+                return _components_driver(pairs, id_a, id_b)
+        fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        sym = fwd.unionByName(
+            pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+        )
+        with materialized(sym) as sym:
+            return _propagate_labels(sym, max_iterations)
+
+
+def _propagate_labels(sym: DataFrame, max_iterations: int) -> DataFrame:
+    """Min-label propagation over the symmetrized edge list ``sym``
+    (``src``, ``dst``). Every round's labels are localCheckpoint-ed, so
+    the converged frame reads neither ``sym`` nor an earlier round."""
     labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
         .localCheckpoint()
     )
-    if owned:
-        # labels is materialized (localCheckpoint) and sym is persisted;
-        # nothing re-reads the raw pair pipeline past this point
-        pairs.unpersist()
-    try:
-        for _ in range(max_iterations):
-            neighbor = (
-                sym.join(labels, sym.dst == labels.id)
-                .select(F.col("src").alias("id"), "component")
-            )
-            new_labels = (
-                labels.unionByName(neighbor)
-                .groupBy("id")
-                .agg(F.min("component").alias("component"))
-                .localCheckpoint()  # truncate lineage — see module docstring
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.component") != F.col("o.component"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                return labels
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} rounds "
-            f"— the pair graph has a longer diameter than duplicate clusters "
-            f"produce; raise max_iterations or use a pointer-doubling variant."
+    for _ in range(max_iterations):
+        neighbor = (
+            sym.join(labels, sym.dst == labels.id)
+            .select(F.col("src").alias("id"), "component")
         )
-    finally:
-        # Converged labels are localCheckpoint-materialized, so the edge
-        # cache is safe to drop on BOTH exits — including the raise, which
-        # previously stranded it for the session lifetime.
-        sym.unpersist()
+        new_labels = (
+            labels.unionByName(neighbor)
+            .groupBy("id")
+            .agg(F.min("component").alias("component"))
+            .localCheckpoint()  # truncate lineage — see module docstring
+        )
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), "id")
+            .filter(F.col("n.component") != F.col("o.component"))
+            .limit(1)
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iterations} rounds "
+        f"— the pair graph has a longer diameter than duplicate clusters "
+        f"produce; raise max_iterations or use a pointer-doubling variant."
+    )
 
 
 def connected_components_stars(
@@ -200,29 +194,24 @@ def connected_components_stars(
     :func:`connected_components`.
     """
     # pairs is read twice (edges, then the node universe), and the
-    # candidate pipeline feeding it is expensive to replay — persist for
-    # the duration unless the caller already did (same rationale as
-    # connected_components). Both consumers localCheckpoint (nodes too —
-    # the small extra job buys releasing the pair cache immediately
-    # instead of holding it until the final read-off join).
-    owned = pairs.storageLevel == StorageLevel.NONE
-    if owned:
-        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    edges = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        pairs.select(F.col(id_a).alias("id"))
-        .unionByName(pairs.select(F.col(id_b).alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    if owned:
-        # both consumers are now materialized; the raw pipeline is done
-        pairs.unpersist()
+    # candidate pipeline feeding it is expensive to replay — cache it
+    # while both are built (same rationale as connected_components).
+    # Both consumers localCheckpoint (nodes too — the small extra job
+    # buys releasing the pair cache immediately instead of holding it
+    # until the final read-off join).
+    with materialized(pairs) as pairs:
+        edges = (
+            pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+            .localCheckpoint()
+        )
+        nodes = (
+            pairs.select(F.col(id_a).alias("id"))
+            .unionByName(pairs.select(F.col(id_b).alias("id")))
+            .distinct()
+            .localCheckpoint()
+        )
 
     def _fingerprint(e: DataFrame) -> tuple:
         # bit_xor folds, not sum: XOR cannot overflow (sum of longs

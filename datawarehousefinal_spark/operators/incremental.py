@@ -34,13 +34,13 @@ Reference scope: the reference has no dedup at all (SURVEY.md §2.3 J5 is
 an unwired Levenshtein step); this module is beyond-reference scale
 machinery in the same family as :mod:`operators.dedup`.
 
-Persist lifetime: the batch-signature and dropped-id frames persist
-(MEMORY_AND_DISK) because both returned outputs — (survivors, delta) —
-consume them; they are id-only/batch-bounded, and the blocks release via
-the ContextCleaner once the caller drops the returned frames. A caller
-holding many batches' outputs alive in one session should materialize
-(write) each batch's outputs and release the references — the
-foreachBatch sinks in :mod:`streaming.pipeline` already do.
+Cache lifetime: the batch-signature and dropped-id frames are cached
+(:func:`session.persisted`) because both returned outputs — (survivors,
+delta) — consume them. They are id-only/batch-bounded, but they stay in
+the session's cache until it ends or evicts them: dropping the returned
+frames does not release them. A long-lived session ingesting many
+batches should materialize (write) each batch's outputs and clear what
+it no longer reads.
 """
 
 from __future__ import annotations
@@ -49,7 +49,6 @@ import re
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from datawarehousefinal_spark.functions.textnorm import normalize_text
 from datawarehousefinal_spark.operators.dedup import (
@@ -61,6 +60,7 @@ from datawarehousefinal_spark.operators.dedup import (
     simhash_combo_keys,
     simhash_dropped_ids,
 )
+from datawarehousefinal_spark.session import persisted
 
 # NULL text cannot be hashed; all-NULL rows form one dedup group (matching
 # exact_dedup's window semantics and SQL PARTITION BY, which group NULLs).
@@ -219,9 +219,9 @@ def incremental_minhash_dedup(
     The store never shuffles on anything except its banded keys, and only
     (band, key, id) triples move for candidate generation.
     """
-    bsig = minhash_signature(
+    bsig = persisted(minhash_signature(
         batch, id_col, text_col, num_hashes, shingle_width, hash_mode
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
 
     # -- within-batch tier (drop the larger id of each near-dup pair) -----
     # Candidates come from the canonical banded self-join (shared with the
@@ -242,7 +242,7 @@ def incremental_minhash_dedup(
     # isEmpty probe is one read-first-row job (instant on the local
     # bootstrap relation, one footer read on a parquet store).
     if store_sig.isEmpty():
-        dropped = wb_dropped.persist(StorageLevel.MEMORY_AND_DISK)
+        dropped = persisted(wb_dropped)
         survivors = batch.join(dropped, id_col, "left_anti")
         delta = bsig.join(dropped, id_col, "left_anti")
         return survivors, delta
@@ -278,11 +278,7 @@ def incremental_minhash_dedup(
     # ``dropped`` feeds BOTH anti-joins — without a persist the whole
     # candidate + verification pipeline executes twice (once per output).
     # It is an id-only frame bounded by the batch size.
-    dropped = (
-        wb_dropped.unionByName(cross_dropped)
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    dropped = persisted(wb_dropped.unionByName(cross_dropped).distinct())
     survivors = batch.join(dropped, id_col, "left_anti")
     delta = bsig.join(dropped, id_col, "left_anti")
     return survivors, delta
@@ -349,9 +345,7 @@ def incremental_simhash_dedup(
        fingerprints, verification = one ``bit_count(xor)`` per candidate.
        Only (fingerprint, table, key) triples move.
     """
-    bfp = simhash(batch, id_col, text_col, shingle_width).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    bfp = persisted(simhash(batch, id_col, text_col, shingle_width))
     # ONE probe job resolves BOTH runtime questions — the bootstrap
     # short-circuit (is the store empty?) and the auto key width — by
     # aggregating over the tagged fingerprint union: approx distinct is
@@ -390,7 +384,7 @@ def incremental_simhash_dedup(
         combo_size=combo_size, max_dropped_frac=None,
     )
     if store_empty:
-        dropped = wb_dropped.persist(StorageLevel.MEMORY_AND_DISK)
+        dropped = persisted(wb_dropped)
         survivors = batch.join(dropped, id_col, "left_anti")
         delta = bfp.join(dropped, id_col, "left_anti")
         return survivors, delta
@@ -422,11 +416,7 @@ def incremental_simhash_dedup(
         matched_fps, bfp["simhash"] == matched_fps["__bf"]
     ).select(id_col).distinct()
 
-    dropped = (
-        wb_dropped.unionByName(cross_dropped)
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    dropped = persisted(wb_dropped.unionByName(cross_dropped).distinct())
     survivors = batch.join(dropped, id_col, "left_anti")
     delta = bfp.join(dropped, id_col, "left_anti")
     return survivors, delta

@@ -322,7 +322,7 @@ def mdx_aggregate_navigator_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialize_aggregate,
         mdx_query_navigated,
     )
-    from datawarehousefinal_spark.queries import _rebuilt, _scratch_path
+    from datawarehousefinal_spark.queries import _eager, _scratch_path
     from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     cube = _movimientos_cube(spark, sf_dir)
@@ -340,7 +340,7 @@ def mdx_aggregate_navigator_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = mdx_query_navigated(
         cube, _MDX_MONTH_STATEMENT, [decoy, rollup]
     )
-    return _rebuilt(out)
+    return _eager(out)
 
 
 @query(

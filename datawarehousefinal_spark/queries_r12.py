@@ -491,14 +491,14 @@ def mdx_navigator_partition_pruned_q(
     equality proves the route+prune returned the exact fact-path
     answer. At 100 TB this compounds the two layout levers: the rollup
     collapses the fact to cells, the partitioning makes a diced read
-    touch only the diced cells' files. Result is ``_rebuilt`` so the
+    touch only the diced cells' files. Result is ``_eager`` so the
     driver's hash pass never re-reads the scratch rollup."""
     from datawarehousefinal_spark.operators.aggnav import (
         materialize_aggregate,
         mdx_query_navigated,
     )
     from datawarehousefinal_spark.plans.audit import physical_plan
-    from datawarehousefinal_spark.queries import _rebuilt, _scratch_path
+    from datawarehousefinal_spark.queries import _eager, _scratch_path
     from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     cube = _movimientos_cube(spark, sf_dir)
@@ -521,7 +521,7 @@ def mdx_navigator_partition_pruned_q(
         raise RuntimeError(
             "year dice did not prune the partitioned rollup at the scan"
         )
-    return _rebuilt(out)
+    return _eager(out)
 
 
 # ---------------------------------------------------------------------------

@@ -89,14 +89,14 @@ def advisor_materialized_route_q(
     story — ONE advisor pass (a single wide count-distinct aggregate
     over the star) + one materialization shuffle per pick buys every
     future dashboard query a kilobyte rollup read instead of a fact
-    scan. Result is ``_rebuilt`` so the driver's hash pass never
+    scan. Result is ``_eager`` so the driver's hash pass never
     re-reads the scratch rollups."""
     from datawarehousefinal_spark.operators.aggnav import (
         materialize_recommended,
     )
     from datawarehousefinal_spark.operators.mdx import mdx_query
     from datawarehousefinal_spark.plans.audit import physical_plan
-    from datawarehousefinal_spark.queries import _rebuilt, _scratch_path
+    from datawarehousefinal_spark.queries import _eager, _scratch_path
     from datawarehousefinal_spark.queries_r10 import _movimientos_cube
 
     cube = _movimientos_cube(spark, sf_dir)
@@ -115,7 +115,7 @@ def advisor_materialized_route_q(
             "front-door query did not route to the materialized "
             "recommendation — the face would silently prove nothing"
         )
-    return _rebuilt(out)
+    return _eager(out)
 
 
 # ---------------------------------------------------------------------------

@@ -1,17 +1,28 @@
-"""SparkSession factory tuned for both local testing and cluster scale.
+"""SparkSession factory and the session-scoped policies every module shares.
 
 The reference delegates execution to Postgres + Pentaho's row-at-a-time step
 engine (SURVEY.md §3-4); our equivalent of its "engine configuration" is a
 SparkSession with adaptive execution on. Every knob here is a public Spark
-conf.
+conf, and this module owns the two policies that would otherwise be spelled
+once per call site:
+
+- **Scoped confs.** A conf one piece of work needs (a data-sized reducer
+  count, cached-plan coalescing) is set around that work and restored
+  after it — never left on the session, so no global conf can change what
+  another face computes (:func:`scoped_shuffle_partitions`).
+- **Caching.** :func:`persisted` is the package's only ``persist`` call and
+  :func:`materialized` its scoped form; no other module persists, caches or
+  picks a storage level.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 # Defaults sized for the test harness (local[$SPARK_GRAFT_CPUS], 128 GiB).
 # On a real cluster the same conf names apply; only master/memory change.
@@ -21,14 +32,6 @@ _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Let AQE re-partition plans that materialize a persist() too: the
-    # default (false) pins every cached plan to the RAW shuffle-partition
-    # count, so a kilobyte-scale cached frame (dedup fingerprints, ML
-    # features, curation tiers) is stored — and re-read by every consumer
-    # — as `spark.sql.shuffle.partitions` near-empty blocks, paying that
-    # many tasks per scan. Partitioning only, never results; at scale the
-    # same advisory-size coalescing keeps partitions ~64 MB either way.
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Dimension tables in a star schema are small: let Spark broadcast
     # aggressively (dims here are <= a few MB even at sf100).
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
@@ -48,6 +51,21 @@ _DEFAULT_CONF: dict[str, str] = {
     # inside generated JVM code, not Python).
     "spark.sql.codegen.wholeStage": "true",
 }
+
+
+@contextmanager
+def _scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set ``key`` to ``value`` for the block, then restore the previous
+    value — or unset the key if the session had not set it."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 @contextmanager
@@ -76,13 +94,52 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int | None):
     if n is None:
         yield
         return
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
+    with _scoped_conf(spark, "spark.sql.shuffle.partitions", str(n)):
         yield
+
+
+def persisted(df: DataFrame) -> DataFrame:
+    """Persist ``df`` at Spark's Dataset default level (memory, spilling to
+    disk) and return it. The caller owns the release: use this only where
+    the cached frame outlives the function; everywhere else use
+    :func:`materialized`.
+
+    Cached-plan coalescing is on for this one ``persist()``: Spark builds
+    the cached plan at the call, and by default pins it to the raw
+    ``spark.sql.shuffle.partitions`` count, so a kilobyte-scale frame
+    (dedup fingerprints, ML features, curation tiers) would be stored — and
+    re-read by every consumer — as that many near-empty blocks. With
+    coalescing AQE sizes the cached partitions like any other stage.
+    Partitioning only, never results; the session conf is restored on
+    return, so caches the package does not create keep Spark's default.
+    """
+    with _scoped_conf(
+        df.sparkSession,
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+        "true",
+    ):
+        return df.persist()
+
+
+@contextmanager
+def materialized(df: DataFrame) -> Iterator[DataFrame]:
+    """Yield ``df`` :func:`persisted` for the block and unpersist it on
+    exit, also when the block raises.
+
+    A frame that is already cached (by the caller, or through an equal
+    plan) is yielded unchanged and not released: its owner releases it.
+    A lazy result built inside the block that still reads the cache must
+    be computed inside it too (``localCheckpoint(eager=True)``, a collect,
+    a write or a fit) — after the block it would recompute from source.
+    """
+    if df.storageLevel != StorageLevel.NONE:
+        yield df
+        return
+    cached = persisted(df)
+    try:
+        yield cached
     finally:
-        spark.conf.set(key, prev)
+        cached.unpersist()
 
 
 def get_spark(

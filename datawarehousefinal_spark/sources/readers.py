@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from datawarehousefinal_spark.session import persisted
+
 _CORRUPT_COL = "_corrupt_record"
 
 
@@ -81,7 +83,7 @@ def read_csv_with_repair(
         .csv(path)
     )
     # Spark requires caching before filtering on the corrupt-record column.
-    df = df.cache()
+    df = persisted(df)
     good = df.filter(F.col(_CORRUPT_COL).isNull()).drop(_CORRUPT_COL)
     bad = df.filter(F.col(_CORRUPT_COL).isNotNull()).select(
         F.col(_CORRUPT_COL).alias("raw_line")
@@ -248,7 +250,7 @@ def read_jsonl_with_repair(
     )
     # same caching requirement as the CSV variant: Spark disallows
     # filtering on the corrupt column of an uncached permissive scan
-    df = df.cache()
+    df = persisted(df)
     good = df.filter(F.col(_CORRUPT_COL).isNull()).drop(_CORRUPT_COL)
     bad = df.filter(F.col(_CORRUPT_COL).isNotNull()).select(
         F.col(_CORRUPT_COL).alias("raw_line")

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from datawarehousefinal_spark.session import scoped_shuffle_partitions
+from datawarehousefinal_spark.session import materialized, scoped_shuffle_partitions
 
 
 def read_parquet_stream(
@@ -372,14 +372,13 @@ def foreach_batch_incremental_dedup(
         survivors, _delta = incremental_exact_dedup(
             batch, store, text_col, order_cols
         )
-        # Persist: the dedup pipeline (window shuffle + store scan +
-        # anti-join) feeds both writes; unpersisted it would execute
-        # twice per micro-batch. The store delta is re-derived from the
-        # persisted survivors (their hashes are unique by construction,
-        # so exact_store over them equals the operator's delta) instead
-        # of from _delta, whose lineage would re-run the pipeline.
-        survivors = survivors.persist()
-        try:
+        # Cache: the dedup pipeline (window shuffle + store scan +
+        # anti-join) feeds both writes; uncached it would execute twice
+        # per micro-batch. The store delta is re-derived from the cached
+        # survivors (their hashes are unique by construction, so
+        # exact_store over them equals the operator's delta) instead of
+        # from _delta, whose lineage would re-run the pipeline.
+        with materialized(survivors) as survivors:
             # Survivors before delta: a crash between the writes leaves
             # the store missing this batch's hashes, so the replay
             # re-appends the same survivors — at-least-once on the
@@ -392,8 +391,6 @@ def foreach_batch_incremental_dedup(
             exact_store(survivors, text_col).write.mode("append").parquet(
                 store_path
             )
-        finally:
-            survivors.unpersist()
 
     return _dedup
 

@@ -168,7 +168,7 @@ def test_funnel_transitive_mode_merges_chains(spark):
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     common = dict(
-        min_chars=5, min_quality=0.0, near_dup_threshold=0.9, persist=False
+        min_chars=5, min_quality=0.0, near_dup_threshold=0.9
     )
     trans, _ = curate_corpus(docs, near_dup_mode="transitive", **common)
     t_ids = sorted(r["doc_id"] for r in trans.collect())
